@@ -3532,7 +3532,14 @@ object SparkEntry {
       // subdirectory (PartitionFilters, zero rows of other types ever
       // decoded) — then roll up by day. The lake-layout pattern (q132's
       // Z-order covers intra-file skipping; this is directory-level).
-      val tmp = "/tmp/graft_q261_partitioned"
+      // A directory per call: the result reads it lazily, so a shared
+      // path would let a concurrent run overwrite this run's input. It
+      // lives until the JVM exits.
+      val tmp = java.nio.file.Files
+        .createTempDirectory("graft_q261_partitioned").toString
+      val tmpPath = new org.apache.hadoop.fs.Path(tmp)
+      tmpPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .deleteOnExit(tmpPath)
       ev(s, dir).withColumn("day", date_trunc("DAY", col("ts")))
         .write.mode("overwrite").partitionBy("event_type").parquet(tmp)
       val back = s.read.parquet(tmp).filter(col("event_type") === "purchase")

@@ -102,13 +102,13 @@ object Trend {
                       gateRows: Long = PairSlopeDriverGateRows): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = idx.sparkSession
-    val n = idx.count()
-    if (n <= gateRows) {
-      val rows = idx.select(col("i").cast("long"), col("y").cast("long"))
-        .collect()
+    import spark.implicits._
+    Gate.run[(Long, Long)](
+        idx.select(col("i").cast("long"), col("y").cast("long")),
+        gateRows) { rows =>
       val ys = {
         val a = new Array[Long](rows.length)
-        rows.foreach(r => a(r.getLong(0).toInt - 1) = r.getLong(1))
+        rows.foreach { case (i, y) => a(i.toInt - 1) = y }
         a
       }
       val m = rows.length
@@ -143,7 +143,7 @@ object Trend {
             org.apache.spark.sql.Row(slopes.length.toLong, slopes(k - 1)))
         }
       spark.createDataFrame(out, schema)
-    } else {
+    } {
       // distributed exact order statistic — the pre-extraction q813 code,
       // verbatim: |days|² slopes via the BNL pair join, then global cum =
       // DIMENSION-sized bucket prefix + per-bucket parallel cumulative

@@ -1,4 +1,3 @@
-// scratch scaling-slope probe (not part of the library)
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -12,9 +11,13 @@ import graft.sources.Tables
   * (union with key-shifted copies, preserving per-key version-chain shape).
   * A shuffle/window/hash pipeline should scale ~linearly in rows; a
   * super-linear slope exposes a cliff (spill, quadratic blowup, driver
-  * collect) before it shows up at 100 TB.
+  * collect) before it shows up at 100 TB. Slope = t(k×) / t(1×) / k;
+  * ≤ 1.0 is linear-or-better.
   *
-  * Usage: runMain graft.tools.Stress [sfDir] [k]
+  * Usage: runMain graft.tools.Stress [sfDir] [k]   (k defaults to 10)
+  * `Stress <sfDir> 100` is the decade-up point (~10 M events / ~500 k docs
+  * from sf0.1; give the driver SPARK_DRIVER_MEM=48g): it confirms no cliff
+  * appears once shuffle data exceeds comfortable memory.
   */
 object Stress {
   def main(args: Array[String]): Unit = {
@@ -35,12 +38,17 @@ object Stress {
       s
     }
 
-    /** k copies with shifted keys/ids — same per-key chain shape, k× keys. */
+    /** k copies with shifted keys/ids — same per-key chain shape, k× keys.
+      * Copies are built from a RANGE join against the checkpointed base (one
+      * wide copy of the data, k expressed as a generator) instead of a
+      * k-way union: a 100-branch union plan compiles slowly and re-reads the
+      * base 100 times.
+      */
     def copies(df: DataFrame, keyCol: String, idCol: String, shift: Long): DataFrame =
-      (0 until k).map { i =>
-        df.withColumn(keyCol, col(keyCol) + lit(i * shift))
-          .withColumn(idCol, col(idCol) + lit(i * shift))
-      }.reduce(_ unionByName _)
+      df.crossJoin(spark.range(k).select(col("id").as("_copy")))
+        .withColumn(keyCol, col(keyCol) + col("_copy") * lit(shift))
+        .withColumn(idCol, col(idCol) + col("_copy") * lit(shift))
+        .drop("_copy")
 
     val evCfg = ScdConfig(uniqueKey = Seq("user_id"), updatedAtCol = "ts",
                           changeExclude = Seq("event_id"))
